@@ -56,21 +56,93 @@ object Pixetl {
   /** Tile sink + the spec's pyramid choice: internal overviews (chained
     * IFDs, optionally COG head-first) ride the SAME write; the external
     * layout publishes plain tiles then builds `.ovr` sidecars next to
-    * them (gdaladdo -ro semantics — the tiles stay byte-stable). */
+    * them (gdaladdo -ro semantics — the tiles stay byte-stable).
+    *
+    * Returns the sink's rows, one `(tile_id, path, n_blocks)` per written
+    * tile, persisted and materialised here; the caller unpersists them.
+    * Should a cached partition be lost, reading it again re-writes its
+    * tiles with the same bytes. */
   private def writeWithPyramid(spark: org.apache.spark.sql.SparkSession,
       blocks: org.apache.spark.sql.DataFrame, spec: LayerSpec,
-      outDir: String): Unit =
-    if (spec.overviewLayout == "external" && spec.overviewFactors.nonEmpty) {
-      GeoTiffSpark.writeTiles(blocks, spec, outDir).count()
-      GeoTiffSpark.addOverviewSidecars(spark, outDir, spec,
-        spec.overviewFactors, spec.overviewResampling,
-        seamExact = spec.overviewSeamExact).count()
-    } else
-      GeoTiffSpark.writeTiles(blocks, spec, outDir,
+      outDir: String): org.apache.spark.sql.DataFrame = {
+    val external = spec.overviewLayout == "external" && spec.overviewFactors.nonEmpty
+    val written = (
+      if (external) GeoTiffSpark.writeTiles(blocks, spec, outDir)
+      else GeoTiffSpark.writeTiles(blocks, spec, outDir,
         overviewFactors = spec.overviewFactors,
         overviewMethod = spec.overviewResampling,
         cogLayout = spec.cog,
-        overviewSeamExact = spec.overviewSeamExact).count()
+        overviewSeamExact = spec.overviewSeamExact)).persist()
+    try {
+      written.count()
+      if (external)
+        GeoTiffSpark.addOverviewSidecars(spark, outDir, spec,
+          spec.overviewFactors, spec.overviewResampling,
+          seamExact = spec.overviewSeamExact).count()
+      written
+    } catch {
+      case e: Throwable => written.unpersist(); throw e
+    }
+  }
+
+  /** Dual destination profiles (tiles/tile.py:54-97): the `gdal-geotiff`
+    * variant differs only in creation options the codec normalizes away,
+    * so it materializes as a copy of `outDir` into `gdalDir` —
+    * DISTRIBUTED (Hadoop-FS per task): a driver-side loop would serialize
+    * the whole second profile at 100k tiles. */
+  private def copyProfile(spark: org.apache.spark.sql.SparkSession, outDir: String,
+      gdalDir: String): Unit = {
+    def abs(p: String) =
+      if (p.contains("://")) p else Paths.get(p).toAbsolutePath.toString
+    if (gdalDir.contains("://")) {
+      val p = new org.apache.hadoop.fs.Path(gdalDir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
+    } else Files.createDirectories(Paths.get(gdalDir))
+    val (srcRoot, dstRoot) = (abs(outDir), abs(gdalDir))
+    import spark.implicits._
+    val confBytes = graft.sources.HadoopConfs.capture(
+      spark.sparkContext.hadoopConfiguration)
+    Catalog.existingTiles(spark, outDir).as[String].mapPartitions { ids =>
+      graft.sources.HadoopConfs.install(confBytes)
+      val conf = graft.sources.HadoopConfs.get
+      ids.map { id =>
+        // the tile AND any external .ovr sidecar — a dual profile
+        // must not silently drop the pyramid the primary one has
+        for (name <- Seq(s"$id.tif", s"$id.tif.ovr")) {
+          val src = new org.apache.hadoop.fs.Path(s"$srcRoot/$name")
+          val dst = new org.apache.hadoop.fs.Path(s"$dstRoot/$name")
+          val sfs = src.getFileSystem(conf)
+          val dfs = dst.getFileSystem(conf)
+          dfs.setWriteChecksum(false)
+          if (sfs.exists(src))
+            org.apache.hadoop.fs.FileUtil.copy(sfs, src, dfs, dst, false, true, conf)
+        }
+        id
+      }
+    }.count()
+  }
+
+  /** Publish the manifests of `summary` (with per-band stats when given)
+    * and return its status tally. */
+  private def publish(outDir: String, summary: LayerJob.Summary,
+      stats: Option[org.apache.spark.sql.DataFrame]): Seq[(String, Long)] = {
+    // streamed manifest write (zoom-22-safe)
+    LayerJob.writeTilesGeojson(summary.manifest, s"$outDir/tiles.geojson", stats)
+    Files.writeString(Paths.get(s"$outDir/extent.geojson"),
+      LayerJob.renderExtentGeojson(summary.extent))
+    summary.status.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+  }
+
+  /** Whether a source footprint (WKB) covers exactly one tile of `grid`,
+    * to a thousandth of a pixel. */
+  private[graft] def isGridTile(grid: graft.core.grid.Grid, footprint: Array[Byte]): Boolean = {
+    val e = graft.functions.GeoFunctions.read(footprint).getEnvelopeInternal
+    val c = e.centre()
+    val t = grid.tileBounds(grid.pointTileId(c.x, c.y))
+    val tol = 1e-3 * grid.xres
+    math.abs(e.getMinX - t.left) <= tol && math.abs(e.getMaxX - t.right) <= tol &&
+      math.abs(e.getMinY - t.bottom) <= tol && math.abs(e.getMaxY - t.top) <= tol
+  }
 
   /** Resolve `pixetl://dataset/attr/grid/tiles.geojson` source uris (emitted
     * by [[SubmitJob]] for resampled `depends_on` grids) to the upstream
@@ -88,14 +160,22 @@ object Pixetl {
   /** In-process job entry (SubmitJob's executor): the same pipeline as the
     * CLI on the CALLER's SparkSession — independent layer jobs interleave
     * their stages on one cluster instead of paying a session each. Throws
-    * on failure; returns the status tally. */
+    * on failure; returns the status tally.
+    *
+    * The pixel plan runs once, in the sink. Everything published after it
+    * (tiles.geojson, extent.geojson, the status tally) derives from the
+    * tiles the sink wrote through the job's `summarize`, and the raster
+    * stats (`.aux.xml` sidecars and the manifest's band stats) come from
+    * one pinned pass of `tileStats`, restricted to the written tiles. The
+    * pins are this job's own and are released when it ends; other jobs
+    * sharing the session keep theirs. */
   def run(spark: org.apache.spark.sql.SparkSession, spec0: LayerSpec, dest: String,
           overwrite: Boolean, sub: Option[Seq[String]]): Seq[(String, Long)] = {
       val spec = resolvePixetlUris(spec0, dest)
       val outDir = s"$dest/${spec.prefix()}"
       Files.createDirectories(Paths.get(outDir))
 
-      val (blocks, status) = spec.sourceType match {
+      spec.sourceType match {
         case "raster" =>
           // plan-time catalog: manifest uris ending in .geojson are S2
           // manifests; anything else is harvested from file metadata (S4)
@@ -131,25 +211,31 @@ object Pixetl {
                       "mode" | "med" | "q1" | "q3" | "rms") => r
             case _ => "nearest"
           }
-          // same CRS is NOT enough for the aligned block reader: a resample
-          // job (90/27008 fed from 10/40000 output — the catalog's
-          // depends_on chains) matches CRS but not lattice. Probe EVERY
-          // distinct source's profile at plan time (the reference opens
-          // every source, sources.py:179-210 — these are metadata-only
-          // reads, distributed here): a mixed-resolution source set must
-          // not take the aligned shortcut just because one sampled source
-          // happens to match the grid.
+          // same CRS is NOT enough for the aligned block reader, which
+          // reads a tile's block (r, c) as block (r, c) of one source file.
+          // Every source must be exactly one grid tile: a source wider than
+          // a tile matches CRS and lattice but not the block indexing (its
+          // footprint, from the catalog, settles that), and a resample job
+          // (90/27008 fed from 10/40000 output — the catalog's depends_on
+          // chains) matches CRS but not lattice. Probe EVERY distinct
+          // source's profile at plan time (the reference opens every
+          // source, sources.py:179-210 — these are metadata-only reads,
+          // distributed here): a mixed-resolution source set must not take
+          // the aligned shortcut just because one sampled source happens to
+          // match the grid.
           val aligned = srcEpsg == gridEpsg && {
             import spark.implicits._
-            val distinctUris = catalog0.select("uri").distinct().as[String].collect()
-            require(distinctUris.nonEmpty,
+            val sources = catalog0.dropDuplicates("uri")
+              .select("uri", "footprint").as[(String, Array[Byte])].collect()
+            require(sources.nonEmpty,
               s"no sources found for ${spec.dataset}/${spec.version}: " +
                 s"catalog resolved from ${uris.mkString(", ")} is empty")
-            val resolutions = GeoTiffSpark.harvestResolutions(spark, distinctUris.toSeq)
-            resolutions.forall { case (xres, yres) =>
-              math.abs(xres - grid.xres) <= 1e-9 * grid.xres &&
-                math.abs(yres - grid.yres) <= 1e-9 * grid.yres
-            }
+            sources.forall { case (_, fp) => isGridTile(grid, fp) } &&
+              GeoTiffSpark.harvestResolutions(spark, sources.map(_._1).toSeq)
+                .forall { case (xres, yres) =>
+                  math.abs(xres - grid.xres) <= 1e-9 * grid.xres &&
+                    math.abs(yres - grid.yres) <= 1e-9 * grid.yres
+                }
           }
           val (catalog, reader) =
             if (aligned) (catalog0, GeoTiffSpark.reader)
@@ -162,54 +248,21 @@ object Pixetl {
           val existing = Catalog.existingTiles(spark, outDir)
           val result = LayerJob.run(spark, spec, catalog, reader,
             subset = sub, existing = Some(existing), overwrite = overwrite)
-          writeWithPyramid(spark, result.blocks, spec, outDir)
-          // dual destination profiles (tiles/tile.py:54-97): the
-          // `gdal-geotiff` variant differs only in creation options the
-          // codec normalizes away, so it materializes as a copy —
-          // DISTRIBUTED (Hadoop-FS per task): a driver-side loop would
-          // serialize the whole second profile at 100k tiles
-          val gdalDir = s"$dest/${spec.prefix(fmt = "gdal-geotiff")}"
-          def abs(p: String) =
-            if (p.contains("://")) p else Paths.get(p).toAbsolutePath.toString
-          if (gdalDir.contains("://")) {
-            val p = new org.apache.hadoop.fs.Path(gdalDir)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-          } else Files.createDirectories(Paths.get(gdalDir))
-          val (srcRoot, dstRoot) = (abs(outDir), abs(gdalDir))
-          locally {
-            import spark.implicits._
-            val confBytes = graft.sources.HadoopConfs.capture(
-              spark.sparkContext.hadoopConfiguration)
-            Catalog.existingTiles(spark, outDir).as[String].mapPartitions { ids =>
-              graft.sources.HadoopConfs.install(confBytes)
-              val conf = graft.sources.HadoopConfs.get
-              ids.map { id =>
-                // the tile AND any external .ovr sidecar — a dual profile
-                // must not silently drop the pyramid the primary one has
-                for (name <- Seq(s"$id.tif", s"$id.tif.ovr")) {
-                  val src = new org.apache.hadoop.fs.Path(s"$srcRoot/$name")
-                  val dst = new org.apache.hadoop.fs.Path(s"$dstRoot/$name")
-                  val sfs = src.getFileSystem(conf)
-                  val dfs = dst.getFileSystem(conf)
-                  dfs.setWriteChecksum(false)
-                  if (sfs.exists(src))
-                    org.apache.hadoop.fs.FileUtil.copy(sfs, src, dfs, dst, false, true, conf)
-                }
-                id
-              }
-            }.count()
+          val written = writeWithPyramid(spark, result.blocks, spec, outDir)
+          // stats once, over the written tiles only: with no nodata value,
+          // a tile whose blocks are all masked has a stats row but no tile,
+          // and must get neither a sidecar nor a manifest entry
+          val stats = Option.when(spec.computeStats)(result.tileStats
+            .join(written.select("tile_id"), Seq("tile_id"), "left_semi").persist())
+          try {
+            copyProfile(spark, outDir, s"$dest/${spec.prefix(fmt = "gdal-geotiff")}")
+            stats.foreach(st => GeoTiffSpark.writeStatsSidecars(st, outDir,
+              grid.cols.toLong * grid.rows).count())
+            publish(outDir, result.summarize(written.select("tile_id")), stats)
+          } finally {
+            stats.foreach(_.unpersist())
+            written.unpersist()
           }
-          // streamed manifest write (zoom-22-safe) + optional PAM sidecars
-          LayerJob.writeTilesGeojson(result.manifest, s"$outDir/tiles.geojson",
-            if (spec.computeStats) Some(result.tileStats) else None)
-          if (spec.computeStats) {
-            val g = spec.gridDef
-            GeoTiffSpark.writeStatsSidecars(result.tileStats, outDir,
-              g.cols.toLong * g.rows).count()
-          }
-          Files.writeString(Paths.get(s"$outDir/extent.geojson"),
-            LayerJob.renderExtentGeojson(result.extent))
-          (result.blocks, result.status)
         case "vector" =>
           // S7: features from a live PostGIS via ONE partitioned JDBC scan
           // with the envelope predicate pushed into the database
@@ -227,15 +280,10 @@ object Pixetl {
               s"$dest/features.parquet"))
           }
           val result = VectorJob.run(spark, spec, features, subset = sub)
-          writeWithPyramid(spark, result.blocks, spec, outDir)
-          LayerJob.writeTilesGeojson(result.manifest, s"$outDir/tiles.geojson")
-          Files.writeString(Paths.get(s"$outDir/extent.geojson"),
-            LayerJob.renderExtentGeojson(result.extent))
-          (result.blocks, result.status)
+          val written = writeWithPyramid(spark, result.blocks, spec, outDir)
+          try publish(outDir, result.summarize(written.select("tile_id")), None)
+          finally written.unpersist()
       }
-
-      val _ = blocks // per-branch writes already materialized above
-      status.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
   }
 }
 

@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory with the settings every graft job wants.
   *
-  * Local testing runs `local[32]` in one JVM; the same settings scale to a
-  * real cluster (AQE re-plans shuffles at runtime, shuffle partitions sized
-  * to cores not the 200 default, broadcast threshold left at default so
-  * small dimension tables broadcast automatically).
+  * A local session defaults to one core (and one shuffle partition) per
+  * host processor; the same settings scale to a real cluster (AQE
+  * re-plans shuffles at runtime, shuffle partitions sized to cores not the
+  * 200 default, broadcast threshold left at default so small dimension
+  * tables broadcast automatically).
   */
 object GraftSession {
 
@@ -18,7 +19,10 @@ object GraftSession {
   def shjThreshold: String =
     sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m")
 
-  def builder(appName: String = "graft", cores: String = "32"): SparkSession.Builder =
+  /** The default session width: this host's processor count. */
+  def hostCores: String = Runtime.getRuntime.availableProcessors.toString
+
+  def builder(appName: String = "graft", cores: String = hostCores): SparkSession.Builder =
     SparkSession
       .builder()
       .appName(appName)
@@ -47,7 +51,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Local session for tests / bench, with the graft SQL surface loaded. */
-  def local(appName: String = "graft", cores: String = "32"): SparkSession = {
+  def local(appName: String = "graft", cores: String = hostCores): SparkSession = {
     val s = builder(appName, cores)
       .master(s"local[$cores]")
       .withExtensions(new GraftExtensions)

@@ -177,6 +177,8 @@ object Raster {
   /** Combine block partials into per-(tile, band) statistics (A3 final). */
   def combineStats(blocks: DataFrame, keys: Seq[String]): DataFrame = {
     val p = col("partial")
+    def perPixel(total: Column): Column =
+      when(col("n") > 0, total / col("n")).otherwise(lit(Double.NaN))
     blocks
       .groupBy(keys.map(col): _*)
       .agg(
@@ -185,9 +187,11 @@ object Raster {
         sum(p("sum")).as("s"),
         sum(p("sumsq")).as("ss"),
         sum(p("cnt")).as("n"))
-      .withColumn("stat_mean", col("s") / col("n"))
+      // a group with no valid pixel (n = 0) has no stats: NaN, as the
+      // sidecar and manifest writers expect, not an ANSI division error
+      .withColumn("stat_mean", perPixel(col("s")))
       .withColumn("stat_std",
-        sqrt(greatest(col("ss") / col("n") - pow(col("s") / col("n"), 2), lit(0.0))))
+        sqrt(greatest(perPixel(col("ss")) - pow(perPixel(col("s")), 2), lit(0.0))))
       .drop("s", "ss")
   }
 

@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
   *   (F5) → sinks: block store (K1 stand-in), per-tile stats (A3), manifests
   *   (A6/A7/K3), status tally (A8).
   *
+  * The manifests and the status tally are one function of the set of
+  * processed tiles ([[Result.summarize]]), not of the pixel plan: a caller
+  * that has already written the blocks passes the tiles its sink wrote and
+  * publishes without re-running the read → calc pipeline (`Pixetl.run`).
+  * `Result.manifest`/`extent`/`status` apply it to the tiles of `blocks`.
+  *
   * Scale design: everything partitions by tile_id from the seed on; the only
   * shuffles are (a) the block groupBy for mosaic overlap — keyed
   * (tile, band, block), map-side combined — and (b) the final per-tile
@@ -31,13 +37,32 @@ object LayerJob {
     * Production: a GeoTIFF decoder; tests/bench: Raster.synthesizeBand. */
   type BlockReader = DataFrame => DataFrame
 
+  /** What a job publishes besides its tiles, for one processed-tile set. */
+  final case class Summary(
+      manifest: DataFrame,   // per-tile footprint + metadata (tiles.geojson rows)
+      extent: DataFrame,     // 1-row geometric union (extent.geojson)
+      status: DataFrame)     // status tally (A8)
+
+  /** A job's pixel blocks plus [[Summary]] as a function of the processed
+    * tiles (a relation with a `tile_id` column; duplicates are harmless).
+    * The `manifest`/`extent`/`status` accessors summarize the tiles of
+    * `blocks`, which re-runs the pixel plan; a caller that has written the
+    * blocks summarizes the written tiles instead. */
+  trait Summarized {
+    def blocks: DataFrame
+    def summarize: DataFrame => Summary
+    private lazy val ofBlocks = summarize(blocks.select("tile_id"))
+    def manifest: DataFrame = ofBlocks.manifest
+    def extent: DataFrame = ofBlocks.extent
+    def status: DataFrame = ofBlocks.status
+  }
+
   final case class Result(
       blocks: DataFrame,     // output pixel blocks (post calc/fill)
       tileStats: DataFrame,  // per (tile_id, band) A3 stats
-      manifest: DataFrame,   // per-tile footprint + metadata (tiles.geojson rows)
-      extent: DataFrame,     // 1-row geometric union (extent.geojson)
-      status: DataFrame,     // status tally (A8)
+      summarize: DataFrame => Summary,
       tileHistogram: Option[DataFrame] = None) // per (tile_id, band) A4 buckets
+    extends Summarized
 
   def run(spark: SparkSession, spec: LayerSpec, catalog: DataFrame,
           reader: BlockReader, subset: Option[Seq[String]] = None,
@@ -220,20 +245,6 @@ object LayerJob {
     }.reduce(_ unionByName _)
     val tileStats = Raster.combineStats(statsIn, Seq("tile_id", "band"))
 
-    // manifest rows: tile footprint + dst uri + band metadata (K3 shape)
-    val processedTiles = nonEmpty.select("tile_id").distinct()
-    val manifest = pending
-      .join(processedTiles, Seq("tile_id"), "left_semi")
-      .select(col("tile_id"), col("left"), col("bottom"), col("right"), col("top"),
-        concat(lit(spec.prefix() + "/"), col("tile_id"), lit(".tif")).as("uri"),
-        GeoFunctions.st_asGeoJson(tileEnv).as("geometry"))
-
-    // A6: geometric union of processed footprints → extent.geojson
-    val extent = manifest
-      .select(GeoFunctions.st_makeEnvelope(col("left"), col("bottom"), col("right"), col("top")).as("g"))
-      .agg(GeomUnionAgg.column(col("g")).as("extent_wkb"))
-      .select(GeoFunctions.st_asGeoJson(col("extent_wkb")).as("geometry"))
-
     // A4 per (tile, band) when requested: per-block bucket partials summed
     // elementwise — the gdalinfo -hist shape {count, min, max, buckets[]}
     // (models/pydantic.py:81-85) over the pixel type's storage range.
@@ -260,14 +271,15 @@ object LayerJob {
           .drop("m"))
       }
 
-    // A8: status algebra (pipe.py:137-168; skip reasons raster_pipe.py:62-81)
-    val status = {
-      val processed = processedTiles.withColumn("status", lit("processed"))
+    def summarize(processed: DataFrame): Summary = {
+      val done = pending.join(processed.select("tile_id"), Seq("tile_id"), "left_semi")
+      // A8: status algebra (pipe.py:137-168; skip reasons raster_pipe.py:62-81)
+      val doneIds = done.select("tile_id")
       val notIntersecting = subsetted.select("tile_id")
         .join(withSource.select("tile_id"), Seq("tile_id"), "left_anti")
         .withColumn("status", lit("skipped (does not intersect)"))
       val skipped = pending.select("tile_id")
-        .join(processedTiles, Seq("tile_id"), "left_anti")
+        .join(doneIds, Seq("tile_id"), "left_anti")
         .withColumn("status", lit("skipped (has no data)"))
         .unionByName(notIntersecting)
       val existed =
@@ -275,11 +287,29 @@ object LayerJob {
           existingTiles.select("tile_id").withColumn("status", lit("existing"))
         else spark.emptyDataFrame.withColumn("tile_id", lit("")).withColumn("status", lit(""))
             .limit(0)
-      processed.unionByName(skipped).unionByName(existed)
+      val status = doneIds.withColumn("status", lit("processed"))
+        .unionByName(skipped).unionByName(existed)
         .groupBy("status").agg(count(lit(1)).as("n"))
+      summary(spec, done, status)
     }
 
-    Result(nonEmpty, tileStats, manifest, extent, status, tileHist)
+    Result(nonEmpty, tileStats, summarize, tileHist)
+  }
+
+  /** The [[Summary]] of the processed tiles `done` (with their bounds) and
+    * their status tally: tiles.geojson rows of tile footprint + dst uri (K3
+    * shape) and the geometric union of the footprints (A6, extent.geojson). */
+  private[plans] def summary(spec: LayerSpec, done: DataFrame, status: DataFrame): Summary = {
+    val env = GeoFunctions.st_makeEnvelope(col("left"), col("bottom"), col("right"), col("top"))
+    val manifest = done
+      .select(col("tile_id"), col("left"), col("bottom"), col("right"), col("top"),
+        concat(lit(spec.prefix() + "/"), col("tile_id"), lit(".tif")).as("uri"),
+        GeoFunctions.st_asGeoJson(env).as("geometry"))
+    val extent = manifest
+      .select(env.as("g"))
+      .agg(GeomUnionAgg.column(col("g")).as("extent_wkb"))
+      .select(GeoFunctions.st_asGeoJson(col("extent_wkb")).as("geometry"))
+    Summary(manifest, extent, status)
   }
 
   /** Manifest sink (K3): render tiles.geojson + extent.geojson strings.

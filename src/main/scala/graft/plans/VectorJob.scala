@@ -25,8 +25,10 @@ import org.apache.spark.sql.functions._
   */
 object VectorJob {
 
-  final case class Result(blocks: DataFrame, status: DataFrame,
-                          manifest: DataFrame, extent: DataFrame)
+  /** The packed blocks, plus the manifests and status tally as a function
+    * of the processed tiles ([[LayerJob.Summarized]]). */
+  final case class Result(blocks: DataFrame, summarize: DataFrame => LayerJob.Summary)
+    extends LayerJob.Summarized
 
   /** `features` must carry `geom` (WKB binary); `burnField` names the value
     * column for A2 (ignored for count). */
@@ -42,11 +44,14 @@ object VectorJob {
           GeoFunctions.st_transform(col("geom"), lit("EPSG:4326"), lit("EPSG:3857")))
       else features
 
-    // P3: burn value via SQL calc (CASE WHEN …), default = raw field
-    val valued = spec.calc match {
+    // P3: burn value via SQL calc (CASE WHEN …), default = raw field.
+    // Spread the features over the session before the tile join: a
+    // snapshot arrives as few partitions (one for a small parquet), which
+    // would run the join, the clip and the band split in as many tasks.
+    val valued = (spec.calc match {
       case Some(c) => projected.withColumn("value", expr(c).cast("long"))
       case None    => projected.withColumn("value", col(burnField).cast("long"))
-    }
+    }).repartition(graft.core.Partitions.sessionParallelism(spark))
 
     // F4/J5: features ⋈ tiles on envelope intersection; tiles broadcast
     val seed = grid.tilesDF(spark)
@@ -111,28 +116,19 @@ object VectorJob {
         "block_row", "block_col", "band_1")
       .withColumn("width", lit(block)).withColumn("height", lit(block))
 
-    val processedTiles = withTile.select("tile_id").distinct()
-    val status = processedTiles
-      .withColumn("status", lit("processed"))
-      .unionByName(tiles.select("tile_id")
-        .join(processedTiles, Seq("tile_id"), "left_anti")
-        .withColumn("status", lit("skipped (does not intersect)"))) // vector_pipe.py:62
-      .groupBy("status").agg(count(lit(1)).as("n"))
-
     // K3: the base pipe uploads geojson manifests for vector layers too
-    // (pipes/pipe.py:163-167) — same shape as LayerJob's
-    val outEnv = GeoFunctions.st_makeEnvelope(
-      col("left"), col("bottom"), col("right"), col("top"))
-    val manifest = withTile
-      .select("tile_id", "left", "bottom", "right", "top").distinct()
-      .select(col("tile_id"), col("left"), col("bottom"), col("right"), col("top"),
-        concat(lit(spec.prefix() + "/"), col("tile_id"), lit(".tif")).as("uri"),
-        GeoFunctions.st_asGeoJson(outEnv).as("geometry"))
-    val extent = manifest
-      .select(outEnv.as("g"))
-      .agg(graft.functions.GeomUnionAgg.column(col("g")).as("wkb"))
-      .select(GeoFunctions.st_asGeoJson(col("wkb")).as("geometry"))
+    // (pipes/pipe.py:163-167), with the tile bounds taken from the seed
+    def summarize(processed: DataFrame): LayerJob.Summary = {
+      val done = tiles.join(processed.select("tile_id"), Seq("tile_id"), "left_semi")
+      val status = done.select("tile_id")
+        .withColumn("status", lit("processed"))
+        .unionByName(tiles.join(done.select("tile_id"), Seq("tile_id"), "left_anti")
+          .select("tile_id")
+          .withColumn("status", lit("skipped (does not intersect)"))) // vector_pipe.py:62
+        .groupBy("status").agg(count(lit(1)).as("n"))
+      LayerJob.summary(spec, done, status)
+    }
 
-    Result(withTile, status, manifest, extent)
+    Result(withTile, summarize)
   }
 }

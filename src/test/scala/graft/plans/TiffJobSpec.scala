@@ -449,6 +449,46 @@ class TiffJobSpec extends SparkSpec {
     assert(levels(1).profile.xres == grid.xres * 2)
   }
 
+  test("a grid-resolution source two tiles wide publishes both tiles (not the aligned reader)") {
+    // 2016 x 1008 px at the grid's resolution from (-180, 90): CRS and
+    // resolution match the grid, but the file is not one tile, so its
+    // block (r, c) is not tile block (r, c)
+    val src = s"${dir("wide")}/wide.tif"
+    val bs = grid.blockSize
+    val (w, h) = (2 * grid.cols, grid.rows)
+    def value(x: Int, y: Int): Double = 1 + (x * 3 + y * 5) % 20000
+    val profile = GeoTiff.Profile(
+      width = w, height = h, bands = 1, dataType = "uint16",
+      tileWidth = bs, tileHeight = bs, noData = Some(0.0), epsg = 4326,
+      originX = -180, originY = 90, xres = grid.xres, yres = grid.yres)
+    val writer = new GeoTiff.Writer(src, profile)
+    for (br <- 0 until h / bs; bc <- 0 until w / bs)
+      writer.writeTile(1, br, bc,
+        Array.tabulate(bs * bs)(i => value(bc * bs + i % bs, br * bs + i / bs)))
+    writer.close()
+    val cat = GeoTiffSpark.harvestCatalog(spark, Seq(src)).collect()(0)
+    assert(!graft.Pixetl.isGridTile(grid, cat.getAs[Array[Byte]]("footprint")))
+
+    val json =
+      s"""{"dataset": "wide", "version": "v1", "source_type": "raster",
+         |"pixel_meaning": "x", "data_type": "uint16", "calc": "A * 2",
+         |"grid": "90/1008", "no_data": 0,
+         |"source_uri": ["${dir("wide")}"]}""".stripMargin
+    val parsed = LayerSpec.fromJson(json)
+    val dest = dir("widedest")
+    val status = graft.Pixetl.run(spark, parsed, dest, overwrite = true, sub = None).toMap
+    assert(status("processed") == 2L)
+    // each tile's last block is calc of the file's pixels at the tile's offset
+    for ((id, x0) <- Seq(grid.tileId(0) -> 0, grid.tileId(1) -> grid.cols)) {
+      val t = GeoTiff.open(s"$dest/${parsed.prefix()}/$id.tif")
+      val n = grid.cols / bs
+      val px = t.readTile(1, n - 1, n - 1)
+      for (i <- px.indices)
+        assert(px(i) == 2 * value(x0 + (n - 1) * bs + i % bs, (n - 1) * bs + i / bs),
+          s"$id pixel $i")
+    }
+  }
+
   test("harvested catalog carries footprints usable by the spatial joins") {
     val srcs = Seq(s"${dir("src")}/${grid.tileId(0)}.tif")
     val cat = GeoTiffSpark.harvestCatalog(spark, srcs).collect()(0)
